@@ -184,6 +184,16 @@ object Core {
     }
   }
 
+  /** Hadoop keys that bind the `file:` scheme to the fork-free local
+    * filesystem (LocalFs.scala), for both Hadoop APIs. The FileSystem
+    * cache keys on scheme and user, not class, so a `fs.file.impl`
+    * override needs `disable.cache` or the cached default instance
+    * answers instead. Other schemes are untouched. */
+  val forkFreeLocalFs: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true",
+    "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
   /** Exact money arithmetic: double -> integer cents. Test values carry
     * <= 2 decimals, so x*100 is within ~1e-10 of an integer and rounding
     * is unambiguous in both Spark and DuckDB; summing longs is exact and

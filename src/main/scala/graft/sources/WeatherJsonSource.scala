@@ -147,11 +147,10 @@ class WeatherScan(schema: StructType, options: Map[String, String],
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
     files.map(f =>
-      WeatherPartition(f, endpoint, schema.json, eqFilters, notNullCols,
-        limit): InputPartition)
+      WeatherPartition(f, endpoint, eqFilters, notNullCols, limit): InputPartition)
       .toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new WeatherReaderFactory
+    new WeatherReaderFactory(schema)
 
   override def toMicroBatchStream(checkpoint: String): MicroBatchStream =
     new WeatherMicroBatchStream(files, endpoint, schema, eqFilters,
@@ -159,29 +158,27 @@ class WeatherScan(schema: StructType, options: Map[String, String],
 }
 
 case class WeatherPartition(path: String, endpoint: String,
-    schemaJson: String, eqFilters: Map[String, String],
-    notNullCols: Seq[String], limit: Int)
+    eqFilters: Map[String, String], notNullCols: Seq[String], limit: Int)
   extends InputPartition
 
-class WeatherReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val wp = p.asInstanceOf[WeatherPartition]
-    new WeatherPartitionReader(wp)
-  }
+/** One factory per scan or micro-batch, shipped with the pruned schema:
+  * every payload reader it makes shares that schema. */
+class WeatherReaderFactory(schema: StructType) extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new WeatherPartitionReader(p.asInstanceOf[WeatherPartition], schema)
 }
 
 /** Parses one payload file into rows of the pruned schema, applying
   * pushed equality filters and the pushed limit. */
-class WeatherPartitionReader(p: WeatherPartition)
+class WeatherPartitionReader(p: WeatherPartition, schema: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val schema = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
   private val rows: Iterator[InternalRow] = {
     val text = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.path)),
       java.nio.charset.StandardCharsets.UTF_8)
-    val mapper = new ObjectMapper()
-    val root = mapper.readValue(text, classOf[util.Map[String, Object]])
+    val root = WeatherPartitionReader.mapper
+      .readValue(text, classOf[util.Map[String, Object]])
       .asScala.toMap
     if (root.contains("error"))
       throw new RuntimeException(s"HTTP ${root.getOrElse("status", 500)}: " +
@@ -213,6 +210,11 @@ class WeatherPartitionReader(p: WeatherPartition)
 }
 
 object WeatherPartitionReader {
+  /** Shared by every reader in the JVM: a configured ObjectMapper's reads
+    * are thread-safe, and a mapper per payload rebuilt its caches on
+    * every tick. */
+  private val mapper = new ObjectMapper()
+
   /** Recursive Map -> InternalRow per (possibly pruned) schema, with
     * `.get(key, default)`-style null defaults (weather.py:73-83). */
   def toRow(schema: StructType, m: Map[String, Object]): InternalRow = {
@@ -276,11 +278,10 @@ class WeatherMicroBatchStream(files: Seq[String], endpoint: String,
     // same as batch: pushFilters consumed them, so nothing else will
     // re-check them post-scan
     files.slice(s, e).map(f =>
-      WeatherPartition(f, endpoint, schema.json, eqFilters, notNullCols,
-        limit): InputPartition)
+      WeatherPartition(f, endpoint, eqFilters, notNullCols, limit): InputPartition)
       .toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new WeatherReaderFactory
+    new WeatherReaderFactory(schema)
   override def stop(): Unit = ()
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import graft.core.Core
 import graft.functions.WeatherDims
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -15,8 +17,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    on the weather-json source (one payload per trigger) + foreachBatch
   *    display sink;
   *  - per-tick error => degraded frame, keep looping
-  *    (weather.py:325-331)                                 -> try/catch
-  *    inside foreachBatch emitting the fallback frame row. The reference
+  *    (weather.py:325-331)                                 -> NonFatal
+  *    catch inside foreachBatch emitting the fallback frame row. The reference
   *    carries NO state across ticks (an error drops the previous good
   *    frame), so the sink is deliberately stateless.
   */
@@ -102,23 +104,33 @@ object WeatherPipeline {
     Frame(title, "--", s"Error: ${root(e).getMessage}", "unknown", null, null)
   }
 
-  /** Run the loop: each micro-batch renders one frame to `sink`; any
-    * tick failure emits the degraded frame and the query keeps running. */
+  /** Run the loop: each micro-batch renders one frame to `sink`; a
+    * non-fatal tick failure emits the degraded frame and the query keeps
+    * running. Interrupts (a `stop()` mid-tick) and VM errors still end it.
+    *
+    * The offset and commit logs bind their FileContext while `start()`
+    * builds the query, so pinning the fork-free local filesystem around
+    * `start()` moves every checkpoint write of the query onto it; the
+    * session's own conf is restored when `start()` returns. */
   def run(spark: SparkSession, forecastPaths: String, title: String,
-      trigger: Trigger, checkpoint: String)(sink: Seq[Frame] => Unit): StreamingQuery =
-    observations(spark, forecastPaths).writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val frames =
-          try {
-            import org.apache.spark.sql.Encoders
-            renderFrame(title, interpret(batch.sparkSession, batch))
-              .as(Encoders.product[Frame]).collect().toSeq
-          } catch {
-            case e: Throwable => Seq(errorFrame(title, e))
-          }
-        sink(frames)
-      }
-      .start()
+      trigger: Trigger, checkpoint: String)(sink: Seq[Frame] => Unit): StreamingQuery = {
+    val frameEnc = Encoders.product[Frame]
+    val key = "fs.AbstractFileSystem.file.impl"
+    Core.withConf(spark, key, Core.forkFreeLocalFs(key)) {
+      observations(spark, forecastPaths).writeStream
+        .trigger(trigger)
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val frames =
+            try {
+              renderFrame(title, interpret(batch.sparkSession, batch))
+                .as(frameEnc).collect().toSeq
+            } catch {
+              case NonFatal(e) => Seq(errorFrame(title, e))
+            }
+          sink(frames)
+        }
+        .start()
+    }
+  }
 }
