@@ -2,68 +2,65 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Per-query medians from docs/bench_history.jsonl (last `lastRuns`
-    * SAME-CORPUS runs, failed timings excluded) — the same data
-    * bench_guard.py reads post-hoc, loaded in-run so the tripwire can
-    * fire BEFORE the bench ships its numbers. Missing/corrupt history,
-    * or no records for this corpus tag ⇒ empty map (the tripwire
-    * simply stays quiet). Records without a tag (pre-round-7) are
-    * excluded once a tag is in use — they predate the regen that
-    * motivated tagging. */
-  private def historyMedians(lastRuns: Int, corpus: String)
-      : Map[String, Double] = {
+  /** The `bench` record of every parseable line of
+    * docs/bench_history.jsonl, in file order (a line without a `bench`
+    * wrapper is its own record). Missing/corrupt history ⇒ empty; a
+    * corrupt line is skipped. */
+  private def historyRecords(): Seq[com.fasterxml.jackson.databind.JsonNode] =
     try {
       val path = java.nio.file.Paths.get("docs/bench_history.jsonl")
-      if (!java.nio.file.Files.exists(path)) return Map.empty
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val lines = java.nio.file.Files.readAllLines(path)
-      import scala.jdk.CollectionConverters._
-      val runs = lines.asScala.filter(_.trim.nonEmpty).flatMap { l =>
-        try {
-          val node = mapper.readTree(l)
-          val bench = if (node.has("bench")) node.get("bench") else node
-          val sameCorpus = bench.has("corpus") &&
-            bench.get("corpus").asText() == corpus
-          if (sameCorpus && bench.has("queries")) Some(bench.get("queries"))
-          else None
-        } catch { case _: Throwable => None }
-      }.takeRight(lastRuns)
-      val byQuery = scala.collection.mutable.Map
-        .empty[String, List[Double]].withDefaultValue(Nil)
-      for (qs <- runs; name <- qs.fieldNames().asScala) {
-        val v = qs.get(name).asDouble(-1.0)
-        if (v > 0) byQuery(name) = v :: byQuery(name)
+      if (!java.nio.file.Files.exists(path)) Nil
+      else {
+        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.readAllLines(path).asScala.toSeq
+          .filter(_.trim.nonEmpty).flatMap { l =>
+            try {
+              val node = mapper.readTree(l)
+              Some(if (node.has("bench")) node.get("bench") else node)
+            } catch { case _: Throwable => None }
+          }
       }
-      byQuery.toMap.collect { case (name, vs) if vs.nonEmpty =>
-        val sorted = vs.sorted
-        name -> sorted(sorted.size / 2)
-      }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case _: Throwable => Nil }
+
+  private def sameCorpus(bench: com.fasterxml.jackson.databind.JsonNode,
+      corpus: String): Boolean =
+    bench.has("corpus") && bench.get("corpus").asText() == corpus
+
+  /** Per-query medians from the history (last `lastRuns` SAME-CORPUS
+    * runs, failed timings excluded) — the same data bench_guard.py
+    * reads post-hoc, loaded in-run so the tripwire can fire BEFORE the
+    * bench ships its numbers. No records for this corpus tag ⇒ empty
+    * map (the tripwire simply stays quiet). Records without a tag
+    * (pre-round-7) are excluded once a tag is in use — they predate the
+    * regen that motivated tagging. */
+  private def historyMedians(lastRuns: Int, corpus: String)
+      : Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    val runs = historyRecords()
+      .filter(b => sameCorpus(b, corpus) && b.has("queries"))
+      .map(_.get("queries")).takeRight(lastRuns)
+    val byQuery = scala.collection.mutable.Map
+      .empty[String, List[Double]].withDefaultValue(Nil)
+    for (qs <- runs; name <- qs.fieldNames().asScala) {
+      val v = qs.get(name).asDouble(-1.0)
+      if (v > 0) byQuery(name) = v :: byQuery(name)
+    }
+    byQuery.toMap.collect { case (name, vs) if vs.nonEmpty =>
+      val sorted = vs.sorted
+      name -> sorted(sorted.size / 2)
+    }
   }
 
   /** Totals of the last `lastRuns` FULL (non-partial) same-corpus runs
     * from the history — the guard line's median-of-3 reference, the
-    * same protocol BASELINE.md records. Empty on missing/corrupt
-    * history (the guard line then reports hist_median3: -1). */
-  private def historyTotals(lastRuns: Int, corpus: String): Seq[Double] = {
-    try {
-      val path = java.nio.file.Paths.get("docs/bench_history.jsonl")
-      if (!java.nio.file.Files.exists(path)) return Nil
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val lines = java.nio.file.Files.readAllLines(path)
-      import scala.jdk.CollectionConverters._
-      lines.asScala.filter(_.trim.nonEmpty).flatMap { l =>
-        try {
-          val node = mapper.readTree(l)
-          val bench = if (node.has("bench")) node.get("bench") else node
-          val ok = bench.has("corpus") &&
-            bench.get("corpus").asText() == corpus &&
-            bench.has("value") && !bench.has("partial")
-          if (ok) Some(bench.get("value").asDouble()) else None
-        } catch { case _: Throwable => None }
-      }.takeRight(lastRuns).toSeq
-    } catch { case _: Throwable => Nil }
-  }
+    * same protocol BASELINE.md records. Empty without history (the
+    * guard line then reports hist_median3: -1). */
+  private def historyTotals(lastRuns: Int, corpus: String): Seq[Double] =
+    historyRecords()
+      .filter(b => sameCorpus(b, corpus) && b.has("value") &&
+        !b.has("partial"))
+      .map(_.get("value").asDouble()).takeRight(lastRuns)
 
   /** Median of a floor-probe field over the last `lastRuns` FULL runs
     * that recorded one (any corpus — the probes measure the HOST, not
@@ -73,24 +70,12 @@ object Bench {
     * runs in the window would poison the host median the floor
     * factors divide by (ADVICE r16). -1 when no history. */
   private def historyFloor(field: String, lastRuns: Int): Double = {
-    try {
-      val path = java.nio.file.Paths.get("docs/bench_history.jsonl")
-      if (!java.nio.file.Files.exists(path)) return -1.0
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val lines = java.nio.file.Files.readAllLines(path)
-      import scala.jdk.CollectionConverters._
-      val vs = lines.asScala.filter(_.trim.nonEmpty).flatMap { l =>
-        try {
-          val node = mapper.readTree(l)
-          val bench = if (node.has("bench")) node.get("bench") else node
-          if (bench.has("floor") && !bench.has("partial")
-              && bench.get("floor").has(field))
-            Some(bench.get("floor").get(field).asDouble())
-          else None
-        } catch { case _: Throwable => None }
-      }.filter(_ > 0.0).takeRight(lastRuns).toSeq.sorted
-      if (vs.isEmpty) -1.0 else vs(vs.size / 2)
-    } catch { case _: Throwable => -1.0 }
+    val vs = historyRecords()
+      .filter(b => b.has("floor") && !b.has("partial") &&
+        b.get("floor").has(field))
+      .map(_.get("floor").get(field).asDouble())
+      .filter(_ > 0.0).takeRight(lastRuns).sorted
+    if (vs.isEmpty) -1.0 else vs(vs.size / 2)
   }
 
   def main(args: Array[String]): Unit = {

@@ -16,7 +16,12 @@ object Core {
   /** Driver contract query type: (session, sfDir) => result. */
   type Q = (SparkSession, String) => DataFrame
 
-  def table(s: SparkSession, dir: String, name: String): DataFrame = {
+  /** Read one table of an sf dir. `parallelScan` opts this one read into
+    * [[scanParallel]]'s round-robin floor even when `name` is not in
+    * [[ScanParallelTables]] — a per-call choice, so no other query on
+    * the session sees it. */
+  def table(s: SparkSession, dir: String, name: String,
+      parallelScan: Boolean = false): DataFrame = {
     // events.ts normalization — the generator has shipped it as parquet
     // TIMESTAMP(NANOS) (which Spark reads as a raw long under the
     // legacy conf) and as TIMESTAMP(MICROS, isAdjustedToUTC=false)
@@ -37,8 +42,15 @@ object Core {
       case _ => raw
     }
     else raw
-    scanParallel(s, normalized, path, name)
+    scanParallel(s, normalized, path, name, parallelScan)
   }
+
+  /** Tables whose every read takes the scan-parallelism floor, and the
+    * floor's byte gates over a table's parquet leaves (see
+    * [[scanParallel]]). */
+  val ScanParallelTables: Set[String] = Set("documents")
+  val ScanParallelMinBytes: Long = 64L * 1024
+  val ScanParallelMaxBytes: Long = 32L * 1024 * 1024
 
   /** Scan-parallelism floor for small low-split inputs (optimization
     * guide §2.5 "input skew" / §6): a table whose parquet footprint
@@ -52,20 +64,20 @@ object Core {
     * round-robin exchange after the read). The exchange is gated on the
     * DRIVER-SIDE file stat, so it exists only where it pays:
     *
-    *  - total bytes >= `spark.graft.scan.parallelizeMinBytes` (64 KB
-    *    default): dimension tables below it broadcast anyway, and an
-    *    exchange there is pure stage overhead;
-    *  - total bytes <= `spark.graft.scan.parallelizeMaxBytes` (32 MB
-    *    default): above it the natural splits already spread the scan,
+    *  - total bytes >= `minBytes` ([[ScanParallelMinBytes]], 64 KB):
+    *    dimension tables below it broadcast anyway, and an exchange
+    *    there is pure stage overhead;
+    *  - total bytes <= `maxBytes` ([[ScanParallelMaxBytes]], 32 MB):
+    *    above it the natural splits already spread the scan,
     *    and repartitioning a large input is exactly the shuffle this
     *    engine spends its plans avoiding — at 100 TB the gate NEVER
     *    fires (inputs arrive as many >= 128 MB files) and the plan is
     *    byte-identical to the ungated read;
     *  - leaf file count < defaultParallelism / 2: a many-file directory
     *    (Scale's generated corpora) already scans wide;
-    *  - table name ∈ `spark.graft.scan.parallelizeTables` (default:
-    *    `documents`): the exchange pays only where the pre-exchange
-    *    per-row work is heavy — the text corpus's tokenize/sketch/
+    *  - table name ∈ [[ScanParallelTables]] (`documents`), or the
+    *    caller opted this read in (`parallelScan`): the exchange pays
+    *    only where the pre-exchange per-row work is heavy — the text corpus's tokenize/sketch/
     *    winnow/quality chains burn whole seconds single-threaded, while
     *    the relational tables' scan segments are cheap projections and
     *    the embeddings family runs many small bounded jobs (Lloyd
@@ -86,19 +98,11 @@ object Core {
     * Lazy: the file stat is bounded driver IO at plan build (the
     * corpusTag convention), no job runs (LazinessSpec).
     */
-  private def scanParallel(s: SparkSession, df: DataFrame, path: String,
-      name: String): DataFrame = {
-    // conf parsing sits OUTSIDE the fallback catch (ADVICE r17): a
-    // malformed value (parallelizeMinBytes="64k") must fail loud, not
-    // silently disable the optimization
-    val conf = s.conf
-    val tables = conf.getOption("spark.graft.scan.parallelizeTables")
-      .getOrElse("documents").split(",").map(_.trim).toSet
-    if (!tables.contains(name)) return df
-    val minB = conf.getOption("spark.graft.scan.parallelizeMinBytes")
-      .map(_.toLong).getOrElse(64L * 1024)
-    val maxB = conf.getOption("spark.graft.scan.parallelizeMaxBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
+  private[graft] def scanParallel(s: SparkSession, df: DataFrame,
+      path: String, name: String, parallelScan: Boolean = false,
+      minBytes: Long = ScanParallelMinBytes,
+      maxBytes: Long = ScanParallelMaxBytes): DataFrame = {
+    if (!parallelScan && !ScanParallelTables.contains(name)) return df
     val n = s.sparkContext.defaultParallelism
     try {
       def leaves(f: java.io.File): Seq[java.io.File] =
@@ -110,7 +114,7 @@ object Core {
       val ls = leaves(new java.io.File(path))
         .filter(_.getName.endsWith(".parquet"))
       val total = ls.map(_.length).sum
-      if (n > 1 && total >= minB && total <= maxB && ls.size < n / 2)
+      if (n > 1 && total >= minBytes && total <= maxBytes && ls.size < n / 2)
         df.repartition(n)
       else df
     } catch {
@@ -150,9 +154,9 @@ object Core {
     * consumes a query's result (Verify's write, Bench/Profile's sink);
     * between queries the cache manager is then empty of graft-created
     * entries. Unpersisting an already-unpersisted plan is a no-op, so
-    * utilities that manage their own lifecycle (ccFixpoint's round
-    * labels) compose safely. Non-blocking: eviction proceeds while the
-    * next query plans.
+    * utilities that manage their own lifecycle (the eager CC loop, which
+    * frees its own superseded label checkpoints) compose safely.
+    * Non-blocking: eviction proceeds while the next query plans.
     */
   def releaseShared(): Unit = {
     var df = sharedRegistry.poll()
@@ -200,9 +204,6 @@ object Core {
     * associative (shuffle-order independent, unlike double sums).
     */
   def cents(c: Column): Column = round(c * 100).cast(LongType)
-
-  /** One deterministic division back to a display double. */
-  def centsToDouble(c: Column): Column = c / 100.0
 
   /** events-as-weather-observations: `props.k` is the WMO-style code
     * (0..99), `value` the temperature reading, `ts` the observation time.

@@ -1961,11 +1961,6 @@ object DedupOps {
     simhashJoin(s, dir, _ =!= _)
       .select(col("a_id").as("n"), col("b_id").as("m"))
 
-  /** Bounded-diameter connected components over the SimHash edge set
-    * (see the `dedup_cluster_cc` entry in [[queries]]). The symmetric
-    * edge list comes from ONE pass of the bucket join (filter a≠b
-    * instead of a&lt;b then union-swap), so the sketch/bucket subplan is
-    * referenced once per propagation round, not twice. */
   /** One synchronous min-label-propagation pass over a self-looped
     * symmetric edge relation `selfEdges(n, m)` (every node carries its
     * (v, v) loop): new_label(v) = min over (v, m) edges of old_label(m)
@@ -1992,6 +1987,11 @@ object DedupOps {
     edges.unionByName(
       nodes.select(col("doc_id").as("n"), col("doc_id").as("m")))
 
+  /** Bounded-diameter connected components over the SimHash edge set
+    * (see the `dedup_cluster_cc` entry in [[queries]]). The symmetric
+    * edge list comes from ONE pass of the bucket join (filter a≠b
+    * instead of a&lt;b then union-swap), so the sketch/bucket subplan is
+    * referenced once per propagation round, not twice. */
   def dedupClusterCC(s: SparkSession, dir: String,
       rounds: Int = CcRounds): DataFrame = {
     // The (self-looped) edge list is referenced once per round: without
@@ -2113,7 +2113,7 @@ object DedupOps {
   private[graft] def ccDoubled(nodes: DataFrame, edges: DataFrame,
       pairs: Int, truncate: Boolean = true,
       jumps: Int = StarCcJumps): DataFrame =
-    if (truncate) ccPsLoop(nodes, edges, pairs, jumps, certEvery = 1)._1
+    if (truncate) ccPsLoop(nodes, edges, pairs, jumps)._1
     else {
       val selfEdges = shared(withSelfLoops(nodes, edges)
         .repartition(SkewJoin.defaultParts(nodes.sparkSession), col("m")))
@@ -2132,30 +2132,6 @@ object DedupOps {
       labels
     }
 
-  /** The eager (P,S) loop behind [[ccDoubled]] and
-    * [[ccDoubledFixpointWithPairs]]: per segment, one propagate
-    * ([[ccRound]]) + `jumps` shortcuts ([[ccShortcut]]), each output
-    * eagerly `localCheckpoint`ed (the shortcut references its input
-    * twice — un-materialized it would execute the corpus-scaled edge
-    * join twice; and checkpointing truncates lineage so every
-    * segment's analyzed plan is constant-size, the GraphX/Pregel
-    * per-superstep persist). Runs with AQE disabled (see
-    * [[ccDoubled]]'s scaladoc — fixed-shape pinned label joins, the
-    * per-segment re-planning was the measured driver cost) in a
-    * CLONED session since round 14, so the flip is invisible to
-    * concurrent queries on the caller's session (see the body
-    * comment).
-    *
-    * Convergence check is one node-sized aggregate per segment, no
-    * join: labels are per-node NON-INCREASING under both steps
-    * (propagate's min includes the node's own label via the self-loop;
-    * the jump is monotone — label(label(v)) <= label(v)), so
-    * sum(cluster) strictly decreases unless NO label changed, and an
-    * unchanged sum certifies the true fixpoint (one full (P,S) segment
-    * with no change makes every later segment the identity). Returns
-    * (labels, segments run INCLUDING the final no-change segment that
-    * certifies convergence) — the same counting contract the round-11
-    * census rows recorded with the join-based check. */
   /** Diagnostic counters for the folded certificate (round 18): which
     * path produced each certificate — the observed metrics riding the
     * checkpoint job, or the explicit fallback aggregate. Spec-read
@@ -2165,9 +2141,34 @@ object DedupOps {
   private[graft] val ccCertFallback =
     new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The one eager CC loop, behind [[ccDoubled]],
+    * [[ccDoubledFixpointWithPairs]], [[ccFixpointWithRounds]] (`jumps`
+    * = 0: plain propagation) and [[ccIncrementalUpdate]]: per segment,
+    * one propagate ([[ccRound]]) + `jumps` shortcuts ([[ccShortcut]]),
+    * the segment's output eagerly `localCheckpoint`ed (the shortcut
+    * references its input twice — un-materialized it would execute the
+    * corpus-scaled edge join twice; and checkpointing truncates lineage
+    * so every segment's analyzed plan is constant-size, the
+    * GraphX/Pregel per-superstep persist). Runs with AQE disabled (see
+    * [[ccDoubled]]'s scaladoc — fixed-shape pinned label joins, the
+    * per-segment re-planning was the measured driver cost) in a
+    * CLONED session since round 14, so the flip is invisible to
+    * concurrent queries on the caller's session (see the body
+    * comment).
+    *
+    * Convergence check is one label-sum certificate per segment, no
+    * join, riding the segment's checkpoint job: labels are per-node
+    * NON-INCREASING under both steps (propagate's min includes the
+    * node's own label via the self-loop; the jump is monotone —
+    * label(label(v)) <= label(v)), so
+    * sum(cluster) strictly decreases unless NO label changed, and an
+    * unchanged sum certifies the true fixpoint (one full (P,S) segment
+    * with no change makes every later segment the identity). Returns
+    * (labels, segments run INCLUDING the final no-change segment that
+    * certifies convergence) — the same counting contract the round-11
+    * census rows recorded with the join-based check. */
   private def ccPsLoop(nodes: DataFrame, edges: DataFrame,
-      maxPairs: Int, jumps: Int, certEvery: Int = 1)
-      : (DataFrame, Int, Boolean) = {
+      maxPairs: Int, jumps: Int): (DataFrame, Int, Boolean) = {
     val origin = nodes.sparkSession
     // Materialize both loop inputs under the CALLER's session/conf
     // (explicit repartition counts — AQE-stable), then run the
@@ -2275,9 +2276,9 @@ object DedupOps {
       // below instead of comparing equal. Empty node sets are a genuine
       // (trivially converged) zero, distinguished from overflow by the
       // row count in the same one-row aggregate.
-      def labelSum(l: DataFrame): java.math.BigDecimal = {
-        val r = l.agg(count(lit(1)).as("n"),
-          sum(col("cluster").cast(DecimalType(38, 0))).as("s")).head()
+      val certCount = count(lit(1)).as("n")
+      val certSum = sum(col("cluster").cast(DecimalType(38, 0))).as("s")
+      def certOf(r: org.apache.spark.sql.Row): java.math.BigDecimal =
         if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
         else {
           val d = r.getDecimal(1)
@@ -2287,7 +2288,8 @@ object DedupOps {
               "certificate cannot be trusted")
           d
         }
-      }
+      def labelSum(l: DataFrame): java.math.BigDecimal =
+        certOf(l.agg(certCount, certSum).head())
       var prevSum = labelSum(labels)
       var converged = false
       var i = 0
@@ -2298,24 +2300,12 @@ object DedupOps {
       // (CollectMetrics is a pass-through node — checkpointed rows are
       // untouched), so the former separate per-segment aggregate job —
       // one more driver roundtrip and one more node-sized scan per
-      // superstep, at any scale — disappears. Metrics arrive on the
-      // listener bus asynchronously; we poll briefly, and if this
-      // build ever stops reporting observed metrics for the checkpoint
-      // action we fall back to the explicit aggregate (identical
-      // expression, identical decimal semantics — just the old
-      // schedule) and stop observing for the rest of the loop.
-      var observeWorks = scoped.conf
-        .getOption("spark.graft.cc.observeCert").forall(_.toBoolean)
-      def certFromRow(r: org.apache.spark.sql.Row): java.math.BigDecimal =
-        if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
-        else {
-          val d = r.getDecimal(1)
-          if (d == null) throw new IllegalStateException(
-            "ccPsLoop: label-sum certificate overflowed decimal(38,0) " +
-              "— corpus beyond the 1e19-doc id-sum bound; the fixpoint " +
-              "certificate cannot be trusted")
-          d
-        }
+      // superstep, at any scale — disappears. If this build ever stops
+      // reporting observed metrics for the checkpoint action we fall
+      // back to the explicit aggregate (identical expression, identical
+      // decimal semantics — just the old schedule, counted in
+      // [[ccCertFallback]]) and stop observing for the rest of the loop.
+      var observeWorks = true
       while (!converged && i < maxPairs) {
         // ONE eager job per segment (optimization round 17): the
         // shortcut reads its input twice, so each intermediate must be
@@ -2335,50 +2325,32 @@ object DedupOps {
           intermediates += p
           step = ccShortcut(p)
         }
-        val needCert = (i + 1) % certEvery == 0 || (i + 1) >= maxPairs
         val certName = s"cc_cert_${tag}_$i"
         val toCheckpoint =
-          if (needCert && observeWorks)
-            step.observe(certName, count(lit(1)).as("n"),
-              sum(col("cluster").cast(DecimalType(38, 0))).as("s"))
+          if (observeWorks) step.observe(certName, certCount, certSum)
           else step
         step = toCheckpoint.localCheckpoint()
         intermediates.foreach(_.unpersist(blocking = false))
         i += 1
-        // CERTIFICATE CADENCE (round 14, r13 verdict #3 — measured
-        // and REJECTED for the contract paths, kept as a parameter):
-        // the sum aggregate runs every `certEvery`-th segment (always
-        // at the cap, so fail-closed callers still throw on genuine
-        // non-convergence). Soundness is cadence-independent — labels
-        // are per-node non-increasing, so sum(i−c) == sum(i) certifies
-        // every segment in between changed nothing — but cadence 2
-        // detects convergence only at matching PARITY: the contract
-        // corpus's fixpoint lands such that cadence 2 ran TWO extra
-        // (P,S) segments while saving only ~4 sub-0.1 s certificate
-        // aggregates — a net LOSS, so every caller stays at
-        // certEvery = 1 and the census-recorded pair counts remain the
-        // true fixpoint the StarCcPairs bound is gated against.
-        if (needCert) {
-          // SYNCHRONOUS metrics read: the checkpoint action has
-          // completed, so CollectMetricsExec's accumulator already
-          // holds the row — queryExecution.observedMetrics reads it
-          // directly, with NO listener-bus dependency (the
-          // Observation/Await form was measured at ~+2 s per segment
-          // of pure bus-lag wait at sf0.1 and rejected)
-          val row =
-            if (observeWorks)
-              toCheckpoint.queryExecution.observedMetrics.get(certName)
-            else None
-          val s2 = row match {
-            case Some(r) => ccCertObserved.incrementAndGet(); certFromRow(r)
-            case None =>
-              observeWorks = false
-              ccCertFallback.incrementAndGet()
-              labelSum(step)
-          }
-          converged = s2.compareTo(prevSum) == 0
-          prevSum = s2
+        // SYNCHRONOUS metrics read: the checkpoint action has
+        // completed, so CollectMetricsExec's accumulator already holds
+        // the row — queryExecution.observedMetrics reads it directly,
+        // with NO listener-bus dependency (the Observation/Await form
+        // was measured at ~+2 s per segment of pure bus-lag wait at
+        // sf0.1 and rejected)
+        val row =
+          if (observeWorks)
+            toCheckpoint.queryExecution.observedMetrics.get(certName)
+          else None
+        val s2 = row match {
+          case Some(r) => ccCertObserved.incrementAndGet(); certOf(r)
+          case None =>
+            observeWorks = false
+            ccCertFallback.incrementAndGet()
+            labelSum(step)
         }
+        converged = s2.compareTo(prevSum) == 0
+        prevSum = s2
         // previous segment's labels: last read was ccRound above
         freeLocalCheckpoint(labels)
         labels = step
@@ -2618,7 +2590,7 @@ object DedupOps {
       .unionByName(contracted.select(col("m").as("doc_id")))
       .distinct()
     val (superLabels, _, converged) =
-      ccPsLoop(touched, contracted, maxPairs, StarCcJumps, certEvery = 1)
+      ccPsLoop(touched, contracted, maxPairs, StarCcJumps)
     if (!converged) throw new IllegalStateException(
       s"ccIncrementalUpdate: supernode graph did not converge within " +
         s"$maxPairs (P,S) pairs — raising maxPairs is required before " +
@@ -2876,58 +2848,49 @@ object DedupOps {
     * duplicate-chain diameter is unbounded (the contract query's
     * unrolled [[dedupClusterCC]] is exact only to diameter
     * [[CcRounds]]). `nodes` is one row per node id; `edges(n, m)` must
-    * contain both directions of each edge. Each iteration is one
-    * propagate pass plus one driver-side convergence check (a count —
-    * this is a utility with a loop, deliberately outside the lazy
-    * oracle contract); iterations = component diameter in the worst
-    * case, and each one joins only the cached edge relation, so total
-    * work is O(d·|E|) with the corpus read once. Labels decrease
-    * monotonically, so "no label changed" certifies the true CC
-    * fixpoint regardless of diameter. */
+    * contain both directions of each edge. A utility with a driver-side
+    * loop, deliberately outside the lazy oracle contract; iterations =
+    * component diameter in the worst case, and each one joins only the
+    * checkpointed edge relation, so total work is O(d·|E|) with the
+    * corpus read once. */
   def ccFixpoint(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 64): DataFrame =
     ccFixpointWithRounds(nodes, edges, maxRounds)._1
 
   /** [[ccFixpoint]] plus the number of propagate rounds it ran
     * (including the final no-change round that certifies convergence) —
-    * the number the Scale harness records at sf1 and DedupOpsSpec
-    * asserts equals diameter + 1 on known chains.
+    * the number the Scale harness records as `cc_fixpoint` and
+    * DedupOpsSpec asserts equals diameter + 1 on known chains.
     *
-    * Each round's labels are `localCheckpoint`ed, NOT persisted:
-    * persist caches the DATA, but round i+1's LOGICAL plan still
-    * nests round i's entire lineage (including the full candidate-join
-    * derivation of `edges`, re-referenced every round), so analysis
-    * time and plan strings grow O(rounds²) and an open-ended loop dies
-    * on plan bloat long before data size matters — measured in the
-    * round-11 census: 697 s for 12 rounds over a 5k-doc graph, then a
-    * listener-thread heap OOM at 50k docs. `localCheckpoint` truncates
-    * the plan to the materialized partitions (the GraphX/Pregel
-    * iterative-lineage lesson), making every round's plan
-    * constant-size. Eager (the default) so the convergence count never
-    * recomputes a round. The per-round label checkpoints are a few MB
-    * each and are freed with the JVM's block manager; the bounded
-    * contract path ([[ccUnrolled]]) keeps its pure lazy shape — at
-    * [[CcRounds]] the nesting is fixed and oracle-mirrored. */
+    * [[ccPsLoop]] with no shortcut: each segment is exactly one
+    * [[ccRound]], so segments = rounds. Labels never increase under a
+    * round (the self-loop keeps each node's own label in the min), so
+    * the loop's unchanged-label-sum certificate holds exactly when no
+    * label changed. The loop's per-round label checkpoints are freed as
+    * soon as the next round supersedes them; only the returned labels
+    * stay materialized.
+    *
+    * The labels come back checkpointed in the CALLER's session, not the
+    * loop's clone: a clone-session labeling joined with the caller's own
+    * relations plans as a mixed-session query, and the cluster-
+    * maintenance fold seeded from it ran 51 jobs instead of 34
+    * (measured on the benchmark's ingest probe). The hop is one more
+    * node-sized job per call, through a global temp view like the
+    * loop's own inputs. */
   def ccFixpointWithRounds(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 64): (DataFrame, Int) = {
-    val e = withSelfLoops(nodes, edges)
-      .repartition(SkewJoin.defaultParts(nodes.sparkSession), col("m"))
-      .localCheckpoint()
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("cluster"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxRounds) {
-      val next = ccRound(labels, e).localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("cluster", "prev"),
-        "doc_id")
-        .filter(col("cluster") =!= col("prev"))
-        .count()
-      converged = changed == 0
-      labels = next
-      i += 1
-    }
-    (labels, i)
+    val (loopLabels, rounds, _) =
+      ccPsLoop(nodes, edges, maxRounds, jumps = 0)
+    val origin = nodes.sparkSession
+    val gdb = origin.conf.get("spark.sql.globalTempDatabase", "global_temp")
+    val view = "graft_cc_out_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    loopLabels.createOrReplaceGlobalTempView(view)
+    val labels =
+      try origin.table(s"$gdb.$view").localCheckpoint()
+      finally origin.catalog.dropGlobalTempView(view)
+    freeLocalCheckpoint(loopLabels)
+    (labels, rounds)
   }
 
   private lazy val dedupNearOracle: String =

@@ -114,24 +114,15 @@ object RelationalOps {
       distinctAgg: Column => Column): DataFrame = {
     val priceCents = cents(col("o_totalprice"))
     // Opt this ONE orders read into the scan-parallelism floor
-    // (Core.scanParallel — conf-scoped to this build, measured r17):
-    // the exact profile's multi-distinct plans as an Expand of rows ×
-    // profiled columns BELOW the first exchange, so the single-split
-    // orders scan multiplied 6× on one task while the session idled
-    // (the generic orders consumers measured the exchange as a net
-    // tax, which is why `orders` is not in the session default —
+    // (Core.scanParallel, measured r17): the exact profile's
+    // multi-distinct plans as an Expand of rows × profiled columns
+    // BELOW the first exchange, so the single-split orders scan
+    // multiplied 6× on one task while the session idled (the generic
+    // orders consumers measured the exchange as a net tax, which is
+    // why `orders` is not in Core.ScanParallelTables —
     // OPTIMIZATION_r17.md). Same byte gates as every scanParallel
-    // site: at deployment input sizes the conf is a no-op.
-    // APPEND `orders` to the caller's allow-list rather than replacing
-    // it (ADVICE r17): a deployment that removed `documents` from the
-    // conf must not get it silently re-enabled here
-    val curTables = s.conf
-      .getOption("spark.graft.scan.parallelizeTables")
-      .getOrElse("documents")
-    val orders = graft.core.Core.withConf(s,
-      "spark.graft.scan.parallelizeTables", s"$curTables,orders") {
-      table(s, dir, "orders")
-    }
+    // site: at deployment input sizes the opt-in is a no-op.
+    val orders = table(s, dir, "orders", parallelScan = true)
     profileWith(orders, Seq(
       "o_orderkey" -> longProfile("o_orderkey", distinctAgg),
       "o_custkey" -> longProfile("o_custkey", distinctAgg),

@@ -18,59 +18,50 @@ class CoreScanSpec extends AnyFunSuite {
   private def hasRoundRobin(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
 
-  private def withConfs[T](kvs: (String, String)*)(body: => T): T =
-    kvs.foldRight(() => body)((kv, acc) =>
-      () => Core.withConf(spark, kv._1, kv._2)(acc())
-    )()
+  /** Core.scanParallel over a plain read of `name`, with the byte gates
+    * pinned by the caller so no assertion depends on the generated
+    * corpus's file sizes. */
+  private def scan(name: String, parallelScan: Boolean = false,
+      minBytes: Long = Core.ScanParallelMinBytes,
+      maxBytes: Long = Core.ScanParallelMaxBytes) = {
+    val path = s"$dir/$name.parquet"
+    Core.scanParallel(spark, spark.read.parquet(path), path, name,
+      parallelScan, minBytes, maxBytes)
+  }
 
   test("a table under the byte floor gets no exchange") {
-    // pin the gate explicitly (ADVICE r17): asserting against the
-    // DEFAULT 64 KB floor coupled the test to the generated corpus's
-    // byte size, which the driver regenerates between rounds — set the
-    // floor above any plausible file size so the test is data-free
-    withConfs("spark.graft.scan.parallelizeMinBytes" ->
-        (1L << 40).toString) {
-      assert(!hasRoundRobin(Core.table(spark, dir, "documents")),
-        "repartition fired below parallelizeMinBytes")
-    }
+    // the floor sits above any plausible file size
+    assert(!hasRoundRobin(scan("documents", minBytes = 1L << 40)),
+      "repartition fired below the byte floor")
   }
 
   test("named table over the byte floor gets exactly one round-robin exchange; " +
       "other tables never do") {
-    withConfs("spark.graft.scan.parallelizeMinBytes" -> "1") {
-      assert(hasRoundRobin(Core.table(spark, dir, "documents")),
-        "documents scan did not parallelize once over the byte floor")
-      assert(!hasRoundRobin(Core.table(spark, dir, "lineitem")),
-        "a table outside spark.graft.scan.parallelizeTables was repartitioned")
-    }
-  }
-
-  test("the allow-list is a conf, not a constant") {
-    withConfs("spark.graft.scan.parallelizeMinBytes" -> "1",
-        "spark.graft.scan.parallelizeTables" -> "lineitem") {
-      assert(hasRoundRobin(Core.table(spark, dir, "lineitem")))
-      assert(!hasRoundRobin(Core.table(spark, dir, "documents")))
-    }
+    assert(hasRoundRobin(scan("documents", minBytes = 1)),
+      "documents scan did not parallelize once over the byte floor")
+    assert(!hasRoundRobin(scan("lineitem", minBytes = 1)),
+      "a table outside Core.ScanParallelTables was repartitioned")
+    assert(!hasRoundRobin(Core.table(spark, dir, "lineitem")),
+      "Core.table repartitioned a table outside Core.ScanParallelTables")
+    // a per-call opt-in (profile_table's orders read) takes the floor
+    // without touching the allow-list
+    assert(hasRoundRobin(scan("orders", parallelScan = true, minBytes = 1)),
+      "an opted-in read did not parallelize over the byte floor")
   }
 
   test("the large-input cap disables the exchange (the 100 TB regime: " +
       "natural splits already scan wide)") {
-    withConfs("spark.graft.scan.parallelizeMinBytes" -> "1",
-        "spark.graft.scan.parallelizeMaxBytes" -> "2") {
-      assert(!hasRoundRobin(Core.table(spark, dir, "documents")),
-        "repartition fired past parallelizeMaxBytes")
-    }
+    assert(!hasRoundRobin(scan("documents", minBytes = 1, maxBytes = 2)),
+      "repartition fired past the byte cap")
   }
 
   test("result identity: the exchange moves rows, never changes them") {
-    val off = Core.table(spark, dir, "documents")
-      .selectExpr("doc_id", "lang", "source").collect()
-      .map(_.toString).sorted
-    val on = withConfs("spark.graft.scan.parallelizeMinBytes" -> "1") {
-      Core.table(spark, dir, "documents")
-        .selectExpr("doc_id", "lang", "source").collect()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.selectExpr("doc_id", "lang", "source").collect()
         .map(_.toString).sorted
-    }
-    assert(on.sameElements(off))
+    val off = scan("documents", minBytes = 1L << 40)
+    val on = scan("documents", minBytes = 1)
+    assert(!hasRoundRobin(off) && hasRoundRobin(on))
+    assert(rows(on).sameElements(rows(off)))
   }
 }

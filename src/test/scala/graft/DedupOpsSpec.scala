@@ -415,19 +415,61 @@ class DedupOpsSpec extends AnyFunSuite {
     DedupOps.freeLocalCheckpoint(ck)
     // non-checkpoint plans are a no-op, never a crash
     DedupOps.freeLocalCheckpoint((0L until 3L).toDF("doc_id"))
+    // The persisted-RDD registry holds its RDDs weakly, so a GC during
+    // a loop would hide a leak; a listener pins every registered RDD at
+    // each job boundary, so only an explicit unpersist takes one out.
+    // Returns the persisted RDDs `body` left registered.
+    def retainedBy[T](body: => T): (T, Set[Int]) = {
+      val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+      val pin = new org.apache.spark.scheduler.SparkListener {
+        private def pinAll(): Unit =
+          spark.sparkContext.getPersistentRDDs.values.foreach(pinned.add)
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          pinAll()
+        override def onJobEnd(
+            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          pinAll()
+      }
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      spark.sparkContext.addSparkListener(pin)
+      val out = try body finally spark.sparkContext.removeSparkListener(pin)
+      val after = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      pinned.clear()
+      (out, after)
+    }
     // loop-level: a 64-chain runs ~7 segments × (1+jumps) checkpoints
     val nodes = (0L until 64L).toDF("doc_id")
     val edges = (0L until 63L).flatMap(i =>
       Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
-    val (labels, pairs) = DedupOps.ccDoubledFixpointWithPairs(nodes, edges)
+    val ((labels, pairs), after) =
+      retainedBy(DedupOps.ccDoubledFixpointWithPairs(nodes, edges))
     labels.collect()
-    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     // retained: the returned labels' checkpoint (1) plus any unpersist
     // still in flight (non-blocking) — far below one per step
     assert(pairs >= 5, s"chain should need multiple segments, got $pairs")
     assert(after.size <= 3,
       s"expected <=3 retained checkpoint RDDs after the loop " +
         s"(returned labels + in-flight), got ${after.size}")
+    graft.core.Core.releaseShared()
+    // the plain-propagation fixpoint runs the same loop: a 12-chain
+    // needs one round per hop, and its superseded round labels must be
+    // freed too, not kept one checkpoint per round
+    val chain = (0L until 12L).toDF("doc_id")
+    val chainEdges = (0L until 11L).flatMap(i =>
+      Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
+    val ((fixLabels, rounds), after2) =
+      retainedBy(DedupOps.ccFixpointWithRounds(chain, chainEdges))
+    assert(fixLabels.collect().forall(_.getLong(1) == 0L),
+      "fixpoint under-merged the chain")
+    assert(rounds >= 8, s"chain should need >= 8 rounds, got $rounds")
+    assert(after2.size <= 3,
+      s"expected <=3 retained checkpoint RDDs after $rounds fixpoint " +
+        s"rounds (returned labels + in-flight), got ${after2.size}")
+    val views = spark.catalog.listTables(
+      spark.conf.get("spark.sql.globalTempDatabase", "global_temp"))
+      .collect().map(_.name).filter(_.startsWith("graft_cc_"))
+    assert(views.isEmpty, s"CC loop left global temp views: ${views.toSeq}")
     graft.core.Core.releaseShared()
   }
 
